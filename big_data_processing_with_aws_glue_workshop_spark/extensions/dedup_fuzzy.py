@@ -435,43 +435,46 @@ def connected_components(
     an unpersisted overflow path would pay the upstream edge pipeline
     twice — once discarded by the probe, once for the symmetrize); the
     pin is released as soon as the fast path answers or the symmetrize
-    checkpoint materializes. If the probe overflows — or the endpoint
-    dtypes differ, or a probed endpoint is NULL (cases where the
-    driver-side solver and the iterative union-coerce/NULL-row semantics
-    could diverge, r17 ADVICE) — the iterative path runs unchanged.
+    checkpoint materializes, or when either raises. If the probe
+    overflows — or the endpoint dtypes differ, or a probed endpoint is
+    NULL (cases where the driver-side solver and the iterative
+    union-coerce/NULL-row semantics could diverge, r17 ADVICE) — the
+    iterative path runs unchanged.
     ``small_edge_limit=0`` disables the probe — tools/cc_chain_probe.py and
     the convergence tests use that to measure the iterative path itself.
     """
     global LAST_CC_ROUNDS
     e = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    pinned = False
-    if small_edge_limit and e.schema["a"].dataType == e.schema["b"].dataType:
-        e = e.persist()
-        pinned = True
-        head = e.limit(small_edge_limit + 1).collect()
-        if len(head) <= small_edge_limit and all(
-            r["a"] is not None and r["b"] is not None for r in head
-        ):
-            labels = _union_find_min_labels([(r["a"], r["b"]) for r in head])
-            LAST_CC_ROUNDS = 0
-            id_type = e.schema["a"].dataType
-            out_schema = T.StructType(
-                [
-                    T.StructField("id", id_type, True),
-                    T.StructField("label", id_type, True),
-                ]
-            )
-            e.unpersist()
-            return pairs.sparkSession.createDataFrame(
-                sorted(labels.items()), out_schema
-            )
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = sym.localCheckpoint()
+    pinned = bool(small_edge_limit) and e.schema["a"].dataType == e.schema["b"].dataType
     if pinned:
-        # the (eager) checkpoint above materialized the symmetrized edge
-        # list from the cached partitions — the probe's partial run was
-        # reused, and the pin is no longer needed
-        e.unpersist()
+        e = e.persist()
+    try:
+        if pinned:
+            head = e.limit(small_edge_limit + 1).collect()
+            if len(head) <= small_edge_limit and all(
+                r["a"] is not None and r["b"] is not None for r in head
+            ):
+                labels = _union_find_min_labels([(r["a"], r["b"]) for r in head])
+                LAST_CC_ROUNDS = 0
+                id_type = e.schema["a"].dataType
+                out_schema = T.StructType(
+                    [
+                        T.StructField("id", id_type, True),
+                        T.StructField("label", id_type, True),
+                    ]
+                )
+                return pairs.sparkSession.createDataFrame(
+                    sorted(labels.items()), out_schema
+                )
+        sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
+        # eager: materializes the symmetrized edge list from the cached
+        # partitions (the probe's partial run is reused), after which the
+        # pin is no longer needed
+        sym = sym.localCheckpoint()
+    finally:
+        # released on every exit, a probe or checkpoint that raises included
+        if pinned:
+            e.unpersist()
     labels = sym.select(F.col("a").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from collections import OrderedDict
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -89,13 +92,30 @@ def ntz_to_utc_instant(col: F.Column) -> F.Column:
 #   sf_dir, table, defaultParallelism). The ``df.rdd.getNumPartitions()``
 #   probe converts the plan to an RDD (~80-140 ms of driver work) and its
 #   answer is a pure function of (file set, maxPartitionBytes, codec) —
-#   constant for an immutable table within one session.
+#   constant for an immutable table within one session. Composed frames
+#   are keyed on their analyzed plan's semanticHash, read through the
+#   private py4j handle ``df._jdf`` (classic PySpark only; a Spark Connect
+#   frame has no ``_jdf``, and no ``df.rdd`` to probe either). A long-lived
+#   process builds new plans and sessions without end, so the memo is an
+#   LRU of _NPARTS_MEMO_MAX entries; an evicted key only re-runs its probe.
 #
 # Assumption (holds for the driver contract): testdata tables are immutable
 # for the lifetime of a session. Tools that rewrite tables in place must use
 # a new session (they do — each CLI/probe run builds its own).
 _SCHEMA_MEMO: dict = {}
-_NPARTS_MEMO: dict = {}
+_NPARTS_MEMO: OrderedDict = OrderedDict()
+_NPARTS_MEMO_MAX = 512
+
+
+def _memo_nparts(key: tuple, probe: Callable[[], int]) -> int:
+    """``probe()``'s answer for ``key`` from the LRU split-count memo."""
+    if key in _NPARTS_MEMO:
+        _NPARTS_MEMO.move_to_end(key)
+        return _NPARTS_MEMO[key]
+    nparts = _NPARTS_MEMO[key] = probe()
+    if len(_NPARTS_MEMO) > _NPARTS_MEMO_MAX:
+        _NPARTS_MEMO.popitem(last=False)
+    return nparts
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -193,10 +213,7 @@ def parallelize_scan(df: DataFrame, *key_cols: str) -> DataFrame:
             df._jdf.queryExecution().analyzed().semanticHash(),
             target,
         )
-    nparts = _NPARTS_MEMO.get(memo_key)
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        _NPARTS_MEMO[memo_key] = nparts
+    nparts = _memo_nparts(memo_key, lambda: df.rdd.getNumPartitions())
     if nparts >= target:
         return df
     return df.repartition(target, *[F.col(c) for c in key_cols])

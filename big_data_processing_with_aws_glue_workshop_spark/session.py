@@ -7,6 +7,15 @@ Scale posture: AQE (runtime coalescing + skew-join splitting) is on so the
 same plans survive a 1000-executor cluster; shuffle partitions default to the
 local core count but are env-overridable; session timezone is pinned to UTC
 so results are reproducible against external oracles.
+
+Python workers: every session runs Spark's Python worker daemon from this
+package (``pyworker.py``), which skips PySpark's per-task import-cache flush
+when nothing importable changed (docs/SCALE.md, "Python-worker task
+floor"). Workers find the package through ``spark.executorEnv.PYTHONPATH``,
+set to the package's parent directory, so UDF queries run from any working
+directory. On a cluster the executors must be able to import the package
+before their first Python task: install it on every node, or put a zip of it
+on the executors' PYTHONPATH at launch (``--py-files`` on YARN).
 """
 
 from __future__ import annotations
@@ -21,6 +30,12 @@ _LEGACY_REBASE = {
     "spark.sql.parquet.datetimeRebaseModeInWrite": "LEGACY",
     "spark.sql.parquet.int96RebaseModeInWrite": "LEGACY",
 }
+
+# Python workers fork from the engine's daemon (pyworker.py), and they
+# import the package (daemon and UDF closures) from its parent directory,
+# whatever the working directory.
+_DAEMON_MODULE = f"{__package__}.pyworker"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -44,6 +59,7 @@ def get_session(
       input, silent overflow-free casts) are part of the contract.
     - AQE + coalesce + skew-join: plans self-tune at any scale factor.
     - Arrow: fast toPandas / pandas_udf transfer for the extension operators.
+    - ``spark.python.daemon.module``: the engine's worker daemon (above).
     """
     cpus = default_parallelism()
     if master is None:
@@ -74,6 +90,9 @@ def get_session(
     )
     for k, v in _LEGACY_REBASE.items():
         builder = builder.config(k, v)
+    builder = builder.config("spark.python.daemon.module", _DAEMON_MODULE).config(
+        "spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -350,6 +350,25 @@ def test_connected_components_guards_route_to_iterative(spark):
     assert sorted(map(tuple, got2.collect())) == [(1, 1), (2, 1), (3, 1)]
 
 
+def test_connected_components_probe_error_releases_pin(spark):
+    """A probe that raises must not leave the persisted edge list behind:
+    neither a cache entry for the edge plan nor a persisted RDD."""
+    from pyspark import StorageLevel
+
+    from big_data_processing_with_aws_glue_workshop_spark.extensions import dedup_fuzzy
+
+    edges = spark.range(4).select(
+        F.col("id").alias("d1"),
+        F.when(F.col("id") >= 0, F.raise_error("probe failed")).cast("bigint").alias("d2"),
+    )
+    persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="probe failed"):
+        dedup_fuzzy.connected_components(edges)
+    probed = edges.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
+    assert probed.storageLevel == StorageLevel(False, False, False, False, 1)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted_before
+
+
 def test_minhash_pairs_unique_and_exact_jaccard(documents):
     """r18 verify restructure (set-array intersection) regression pin:
     every qualifying pair appears EXACTLY once, and its jaccard equals

@@ -446,3 +446,26 @@ def test_registry_wide_python_node_audit(spark):
         "genuinely justified) add the query to _ARROW_ISLAND_QUERIES "
         "with the in-code justification §2.9 requires"
     )
+
+
+def test_nparts_memo_is_a_bounded_lru(monkeypatch):
+    """parallelize_scan's split-count memo keeps at most _NPARTS_MEMO_MAX
+    keys, evicting the least recently used; a hit does not re-probe."""
+    from collections import OrderedDict
+
+    from big_data_processing_with_aws_glue_workshop_spark.queries import _tables
+
+    monkeypatch.setattr(_tables, "_NPARTS_MEMO", OrderedDict())
+    monkeypatch.setattr(_tables, "_NPARTS_MEMO_MAX", 3)
+    probes = []
+
+    def memo(key):
+        return _tables._memo_nparts(key, lambda: probes.append(key) or len(probes))
+
+    assert [memo(k) for k in ("a", "b", "c")] == [1, 2, 3]
+    assert memo("a") == 1  # hit: "a" becomes the most recent
+    memo("d")  # evicts "b", the least recently used
+    assert list(_tables._NPARTS_MEMO) == ["c", "a", "d"]
+    assert memo("b") == 5  # evicted: probed again
+    assert probes == ["a", "b", "c", "d", "b"]
+    assert len(_tables._NPARTS_MEMO) == 3
